@@ -10,7 +10,10 @@ schema regardless of scale factor.
 Scale note: every accessor returns a *lazy* DataFrame straight off the
 parquet scan — column pruning and predicate pushdown reach the file source
 (verify with ``df.explain``: ``PushedFilters``/``ReadSchema``).  Nothing
-here collects or caches eagerly.
+here collects eagerly; per-corpus artifacts (plans, counts, trained
+quantizers) live in ONE memo keyed by each input table's file
+fingerprint (:func:`memo`), so a table rewritten in place is never
+served stale.
 """
 
 from __future__ import annotations
@@ -38,20 +41,62 @@ TABLE_NAMES = [
 #: TIMESTAMP(MICROS)/NTZ and need no conversion.)
 _NANO_TS_COLS: dict[str, list[str]] = {"events": ["ts"]}
 
-#: (applicationId, sf_dir, name) -> the loaded lazy PLAN.  A DataFrame
-#: is an immutable logical plan, so handing every caller the same
-#: object changes nothing about what executes — each action still
-#: computes from the parquet files — but it skips the repeated
-#: footer/schema read and reader construction a fresh
-#: ``spark.read.parquet`` pays (~0.1 s per call measured at r14: a
-#: query touching 4 catalog tables spent ~0.4 s of its bench wall
-#: re-deriving byte-identical plans).  The relation's file listing is
-#: pinned at first load per session — correct for the immutable input
-#: corpora (and the snapshot semantics table formats provide at
-#: scale); paths whose CONTENTS change between reads (the scratch
-#: sinks) go through ``spark.read`` directly, never this cache.
-#: Keyed by applicationId so a plan can never outlive its session.
-_TABLE_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+#: (artifact, sf_dir, tables, extra) -> (fingerprint, value); see :func:`memo`.
+_MEMO: dict[tuple, tuple] = {}
+
+
+def table_files(sf_dir: str, name: str) -> tuple[tuple[str, int, int], ...] | None:
+    """The table's visible files as sorted ``(path, size, mtime_ns)`` —
+    its fingerprint, and the one walk every footer/size reader shares.
+    Mirrors Spark's reader: underscore/dot-prefixed files and dirs
+    (``_temporary``, ``_SUCCESS``, ``.crc``) are invisible, and EVERY
+    visible file counts regardless of extension (Hive/Impala write
+    suffix-less parts).  ``None`` for non-local tables (the remote-FS
+    case at scale) and directories with no visible file: callers fall
+    back to Spark rather than derive from nothing.  Blind spot: a
+    same-size rewrite within one filesystem timestamp tick."""
+    import os
+
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        if os.path.isfile(path):
+            paths = [path]
+        elif os.path.isdir(path):
+            paths = []
+            for root, dirs, files in os.walk(path):
+                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+                paths += [
+                    os.path.join(root, f) for f in files if not f.startswith(("_", "."))
+                ]
+        else:
+            return None
+        out = []
+        for p in sorted(paths):
+            st = os.stat(p)
+            out.append((p, st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(out) or None
+
+
+def memo(artifact: str, sf_dir: str, tables: tuple[str, ...], build, extra: tuple = ()):
+    """``build()``'s value for ``(artifact, sf_dir, tables, extra)``,
+    rebuilt (and replaced) whenever the fingerprint of any of ``tables``
+    differs from the one it was built under.  The fingerprint is taken BEFORE the
+    build, so a rewrite racing it costs a rebuild, never a stale hit.
+    A ``None`` (a miss: absent table, empty corpus) is never stored.
+    Non-local tables fingerprint as ``None``: memoized by path alone.
+    Concurrent misses may both build; every build is deterministic, so
+    either stored value is right."""
+    fp = tuple(table_files(sf_dir, t) for t in tables)
+    key = (artifact, sf_dir, tables, extra)
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    value = build()
+    if value is not None:
+        _MEMO[key] = (fp, value)
+    return value
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -77,24 +122,48 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
        blocks InjectRuntimeFilter's bloom semi-join reduction; see
        session.py).  The cast stays as graceful degradation for hosts
        that lock the conf.
+
+    The plan is memoized: a DataFrame is an immutable logical plan —
+    each action still computes from the files — and reuse skips the
+    schema read a fresh ``spark.read.parquet`` pays (~0.1 s per call at
+    r14).  It pins the file listing it was read under, hence the
+    fingerprint key; the applicationId key keeps it inside its session.
     """
-    configure(spark)  # outside the cache: idempotent, ~3 ms, and some
-    # callers rely on the conf side effect even on a plan-cache hit
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_PLAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    dtypes = dict(df.dtypes)
-    for col in _NANO_TS_COLS.get(name, []):
-        if dtypes.get(col) == "bigint":
-            # Integer division: nanos exceed 2^53, double math would drift.
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-    ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
-    if ntz_cols:
-        df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
-    _TABLE_PLAN_CACHE[key] = df
-    return df
+    configure(spark)  # outside the memo: idempotent, ~3 ms, and some
+    # callers rely on the conf side effect even on a memo hit
+
+    def read() -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        dtypes = dict(df.dtypes)
+        for col in _NANO_TS_COLS.get(name, []):
+            if dtypes.get(col) == "bigint":
+                # Integer division: nanos exceed 2^53, double math would drift.
+                df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
+        ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
+        if ntz_cols:
+            df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
+        return df
+
+    app = spark.sparkContext.applicationId
+    return memo("plan", sf_dir, (name,), read, extra=(app,))
+
+
+def _footer_sum(sf_dir: str, name: str, field: str) -> int | None:
+    """Sum one parquet footer field over the table's visible files
+    (:func:`table_files`) — pure metadata, no Spark job.  A visible
+    file that is NOT parquet raises in the footer reader and returns
+    ``None``: the Spark fallback then reproduces whatever the reader
+    itself does with it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = table_files(sf_dir, name)
+    if files is None:
+        return None
+    try:
+        return sum(getattr(pq.read_metadata(p), field) for p, _, _ in files)
+    except (OSError, pa.ArrowException):
+        return None
 
 
 def parquet_rowcount(sf_dir: str, name: str) -> int | None:
@@ -108,124 +177,31 @@ def parquet_rowcount(sf_dir: str, name: str) -> int | None:
     ``count()``, which Spark itself answers from footer statistics.
     Row-level parity with ``count()`` is pinned in tests (the catalog
     normalizes column TYPES on load, never row sets)."""
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isfile(path):
-            return pq.ParquetFile(path).metadata.num_rows
-        if os.path.isdir(path):
-            total, n_files = 0, 0
-            for root, dirs, files in os.walk(path):
-                # mirror Spark's reader: hidden files and dirs
-                # (underscore/dot-prefixed — _temporary from aborted
-                # writes, _SUCCESS, .crc) are invisible to count(),
-                # so they must be invisible here too.  EVERY visible
-                # file counts — Spark reads part files regardless of
-                # extension (Hive/Impala write suffix-less parts), so
-                # an extension filter would silently undercount; a
-                # visible file that is NOT parquet raises here and
-                # falls through to the Spark fallback, reproducing
-                # whatever the reader itself would do with it
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                for f in files:
-                    if not f.startswith(("_", ".")):
-                        total += pq.ParquetFile(
-                            os.path.join(root, f)
-                        ).metadata.num_rows
-                        n_files += 1
-            # a directory with NO visible parquet parts is not a local
-            # parquet table — fall back to the distributed count
-            # rather than deriving every sizing rule from n=0
-            return total if n_files else None
-    except Exception:
-        return None
-    return None
-
-
-#: (sf_dir, table) -> row-group count (or None); metadata-only, so one
-#: footer walk per corpus/table serves every spread decision.
-_SPLITS_CACHE: dict[tuple[str, str], int | None] = {}
+    return _footer_sum(sf_dir, name, "num_rows")
 
 
 def parquet_split_count(sf_dir: str, name: str) -> int | None:
     """Total parquet ROW GROUPS across the table's visible files — the
     number of scan tasks the layout can actually feed, since parquet
     cannot split below a row group (a byte-range task whose range holds
-    no row-group start reads nothing).  Same local-footer / hidden-file
-    rules as :func:`parquet_rowcount`; ``None`` for non-local layouts
-    (callers must then assume the layout is splittable — at scale it
-    is, and guessing "unsplittable" would insert a corpus-wide
-    shuffle)."""
-    key = (sf_dir, name)
-    if key in _SPLITS_CACHE:
-        return _SPLITS_CACHE[key]
-    import os
+    no row-group start reads nothing).  Memoized per fingerprint;
+    ``None`` for non-local layouts (callers must then assume the layout
+    is splittable — at scale it is, and guessing "unsplittable" would
+    insert a corpus-wide shuffle)."""
+    def count() -> int | None:
+        return _footer_sum(sf_dir, name, "num_row_groups")
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    out: int | None
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isfile(path):
-            out = pq.ParquetFile(path).metadata.num_row_groups
-        elif os.path.isdir(path):
-            total, n_files = 0, 0
-            for root, dirs, files in os.walk(path):
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                for f in files:
-                    if not f.startswith(("_", ".")):
-                        total += pq.ParquetFile(
-                            os.path.join(root, f)
-                        ).metadata.num_row_groups
-                        n_files += 1
-            out = total if n_files else None
-        else:
-            out = None
-    except Exception:
-        out = None
-    _SPLITS_CACHE[key] = out
-    return out
-
-
-#: (sf_dir, table) -> on-disk bytes (or None); metadata-only, cached.
-_BYTES_CACHE: dict[tuple[str, str], int | None] = {}
+    return memo("splits", sf_dir, (name,), count)
 
 
 def parquet_table_bytes(sf_dir: str, name: str) -> int | None:
     """On-disk byte size of catalog table ``name`` — the scale signal
     for routes that trade extra map passes against shuffle volume
-    (e.g. dedup_verbatim_runs' hash pre-pass).  Same local-file /
-    hidden-file rules as :func:`parquet_split_count`; ``None`` for
-    non-local layouts (callers must then assume the corpus is
-    production-sized)."""
-    key = (sf_dir, name)
-    if key in _BYTES_CACHE:
-        return _BYTES_CACHE[key]
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    out: int | None
-    try:
-        if os.path.isfile(path):
-            out = os.path.getsize(path)
-        elif os.path.isdir(path):
-            total, n_files = 0, 0
-            for root, dirs, files in os.walk(path):
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                for f in files:
-                    if not f.startswith(("_", ".")):
-                        total += os.path.getsize(os.path.join(root, f))
-                        n_files += 1
-            out = total if n_files else None
-        else:
-            out = None
-    except Exception:
-        out = None
-    _BYTES_CACHE[key] = out
-    return out
+    (e.g. dedup_verbatim_runs' hash pre-pass): the sum of the walk's
+    file sizes.  ``None`` for non-local layouts (callers must then
+    assume the corpus is production-sized)."""
+    files = table_files(sf_dir, name)
+    return None if files is None else sum(size for _, size, _ in files)
 
 
 def spread_for_compute(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
@@ -246,7 +222,7 @@ def spread_for_compute(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
       would have paid a full corpus-wide shuffle of raw text for
       nothing.
 
-    The decision reads local parquet footers only (cached, no Spark
+    The decision reads local parquet footers only (memoized, no Spark
     job); unknown/non-local layouts are assumed splittable."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
@@ -258,33 +234,38 @@ def spread_for_compute(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
 
 def table_rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Row count of catalog table ``name``: parquet footers when local
-    (:func:`parquet_rowcount`), the distributed ``count()`` otherwise.
-    THE single fallback rule — the per-module caches in
-    operators/similarity.py (embeddings) and operators/dedup.py
-    (documents) both delegate here so the footer/count semantics
-    cannot diverge between them.  Takes the session, not a DataFrame:
-    both paths must count the same relation (the RAW table), so the
-    fallback loads it itself rather than trusting a caller-passed
-    frame that the footer path would ignore."""
-    n = parquet_rowcount(sf_dir, name)
-    return load_table(spark, sf_dir, name).count() if n is None else n
+    (:func:`parquet_rowcount`), the distributed ``count()`` otherwise,
+    memoized per fingerprint.  THE single fallback rule — the corpus
+    sizes in operators/similarity.py and operators/dedup.py both
+    delegate here.  Takes the session, not a DataFrame: both paths must
+    count the same relation (the RAW table), so the fallback loads it
+    itself rather than trusting a caller-passed frame that the footer
+    path would ignore."""
+
+    def count() -> int:
+        n = parquet_rowcount(sf_dir, name)
+        return load_table(spark, sf_dir, name).count() if n is None else n
+
+    return memo("rowcount", sf_dir, (name,), count)
 
 
 def sink_dir(name: str, sf_dir: str) -> str:
     """Scratch directory for write-then-read-back queries, keyed by the
-    CORPUS: the old fixed shared path meant a sf0.01 correctness run
-    and a sf0.1 bench run interleaving on one host clobbered each
-    other's sink between the eager write and the lazy read-back — the
-    silent form returns the WRONG scale factor's rows against the
-    oracle.  Two concurrent same-corpus runs still share a path, but
-    they write identical data (every sink derives deterministically
-    from the fixture tables), so the residual race is a rare transient
-    read error, never wrong results."""
+    CORPUS: its path and every table's fingerprint.  A fixed shared path
+    let a sf0.01 correctness run and a sf0.1 bench run clobber each
+    other's sink between the eager write and the lazy read-back (the
+    WRONG scale factor's rows against the oracle); a path-only key let
+    incremental writers (the replay staging keeps existing wave files)
+    serve a corpus since rewritten in place.  Two concurrent runs over
+    one corpus still share a path, but they write identical data, so
+    the residual race is a rare transient read error, never wrong
+    results."""
     import hashlib
     import os
     import tempfile
 
-    token = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
+    fp = repr([table_files(sf_dir, t) for t in TABLE_NAMES])
+    token = hashlib.sha256(f"{sf_dir}\0{fp}".encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), "dirhash_spark_sink", token, name)
 
 

@@ -46,7 +46,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..catalog import Catalog, spread_for_compute
+from ..catalog import Catalog, spread_for_compute, table_rowcount
 from ..registry import REGISTRY, query
 from .text import gram_start_indices
 
@@ -142,22 +142,12 @@ _REP_WINDOW = 64
 #: birthday-loaded bucket would build ~10M structs in one value).
 _WINDOW_CHUNK = 512
 
-#: documents-count per sf_dir — ONE count() per corpus, shared by the
-#: parameter-derivation rules below (same pattern as the embeddings
-#: count cache in operators/similarity.py).
-_N_DOCS_CACHE: dict[str, int] = {}
-
 
 def _corpus_n_docs(cat) -> int:
-    n = _N_DOCS_CACHE.get(cat.sf_dir)
-    if n is None:
-        # local corpora answer from parquet footers (no Spark job);
-        # non-local layouts fall back to the distributed count
-        from ..catalog import table_rowcount
-
-        n = table_rowcount(cat.spark, cat.sf_dir, "documents")
-        _N_DOCS_CACHE[cat.sf_dir] = n
-    return n
+    """Documents corpus size for the parameter-derivation rules below
+    (memoized per fingerprint by ``catalog.table_rowcount``, like the
+    embeddings size in operators/similarity.py)."""
+    return table_rowcount(cat.spark, cat.sf_dir, "documents")
 
 
 def _rep_expand_cap(n_docs: int) -> int:
@@ -531,7 +521,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     component connectivity is what the e2e consumers use.
 
     NOTE the derived budget makes construction EAGER: building this
-    query reads one cached corpus row count per sf_dir (local parquet
+    query reads one memoized corpus row count (local parquet
     footers where possible, a distributed count otherwise — same
     contract as the ANN index builders in operators/similarity.py;
     see SURVEY §2.C's eager-construction note).

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Catalog
+from ..catalog import Catalog, memo, table_files, table_rowcount
 from ..registry import query
 
 _TOP_K = 10
@@ -204,48 +204,17 @@ def _nprobe_for(k: int) -> int:
     return min(k, max(_IVF_NPROBE, -(-k * _IVF_NPROBE // 16)))
 
 
-#: Corpus size per sf_dir (ONE embeddings count() per corpus, shared by
-#: every parameter-derivation rule — IVF K and the PQ codebook/re-rank
-#: sizing below all read this).
-_N_CACHE: dict[str, int] = {}
-
-#: Derived K per sf_dir (cached separately from _N_CACHE so benches can
-#: PIN a K without faking a corpus size — scripts/ann_scale_bench.py's
-#: fixed16 mode).
-_IVF_K_CACHE: dict[str, int] = {}
-
-
-def _corpus_n(cat: Catalog) -> int:
-    n = _N_CACHE.get(cat.sf_dir)
-    if n is None:
-        # local corpora answer from parquet footers (no Spark job);
-        # non-local layouts fall back to the distributed count
-        from ..catalog import table_rowcount
-
-        n = table_rowcount(cat.spark, cat.sf_dir, "embeddings")
-        _N_CACHE[cat.sf_dir] = n
-    return n
-
-
 def _corpus_ivf_k(cat: Catalog) -> int:
-    k = _IVF_K_CACHE.get(cat.sf_dir)
-    if k is None:
-        k = _ivf_k(_corpus_n(cat))
-        _IVF_K_CACHE[cat.sf_dir] = k
-    return k
-
-#: Trained coarse quantizers, keyed by sf_dir.  Training is a bounded
-#: O(sample) driver-side job; caching it makes repeated queries reuse
-#: one artifact instead of re-reading the sample per invocation — the
-#: in-process stand-in for the persisted model a production deployment
-#: would load (the on-disk form is the ANN index, ``_ann_index_path``).
-_CENTROID_CACHE: dict[str, np.ndarray] = {}
+    """Derived K for the corpus (its size is memoized per fingerprint
+    by ``catalog.table_rowcount``, footers when local)."""
+    return _ivf_k(table_rowcount(cat.spark, cat.sf_dir, "embeddings"))
 
 
-def _train_sample_order(df):
-    """Trainer-sample ordering: the first-N rows by ``xxhash64(vec_id)``
-    (vec_id tiebreak) — a deterministic PSEUDO-RANDOM total order, so
-    the bounded sample is ingestion-order independent.  Ordering by raw
+def _train_sample(cat: Catalog, n: int) -> list:
+    """Every trainer's bounded sample: the first ``n`` embeddings (as
+    float64 lists) by ``xxhash64(vec_id)`` (vec_id tiebreak) — a
+    deterministic PSEUDO-RANDOM total order, so the bounded sample is
+    ingestion-order independent.  Ordering by raw
     vec_id took the id-PREFIX of the corpus: on a source-ordered ingest
     (the normal case at scale — source 1 owns the low ids) every
     centroid would train inside the first source's region of the
@@ -254,7 +223,13 @@ def _train_sample_order(df):
     full sort materialization); fixtures keep bit-identical behavior
     classes (same seed, same k-means), only the sample membership is
     now unbiased."""
-    return df.orderBy(F.xxhash64("vec_id"), "vec_id")
+    return (
+        cat.embeddings.orderBy(F.xxhash64("vec_id"), "vec_id")
+        .limit(n)
+        .select(F.col("embedding").cast("array<double>").alias("v"))
+        .toPandas()["v"]  # bounded: limit() right above caps the rows
+        .tolist()
+    )
 
 
 def _assign_chunked(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
@@ -281,36 +256,27 @@ def _train_centroids(cat: Catalog) -> np.ndarray | None:
     at the K cap it silently CLAMPED K to the sample size.  Training
     cost is O(sample·K·dim·iters) on the driver, independent of corpus
     size; the distributed trainer (``sim_ann_ivf_distfit``) is the
-    path when even that sample can't represent the corpus.  Cached per
-    sf_dir: train once, reuse for every query in the process."""
-    cached = _CENTROID_CACHE.get(cat.sf_dir)
-    if cached is not None:
-        return cached
-    sample = (
-        _train_sample_order(cat.embeddings)
-        .limit(max(_IVF_SAMPLE, 32 * _corpus_ivf_k(cat)))
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .toPandas()["v"]  # bounded: limit() right above caps the rows
-        .tolist()
-    )
-    if not sample:  # empty corpus: nothing to quantize (callers emit empty)
-        return None
-    x = np.asarray(sample, dtype=np.float64)
-    n_k = min(_corpus_ivf_k(cat), len(x))  # K derived from corpus size
-    rng = np.random.RandomState(7)
-    cents = x[rng.choice(len(x), n_k, replace=False)]
-    for _ in range(_IVF_ITERS):
-        assign = _assign_chunked(x, cents)
-        for k in range(n_k):
-            if (assign == k).any():
-                cents[k] = x[assign == k].mean(0)
-    _CENTROID_CACHE[cat.sf_dir] = cents
-    return cents
+    path when even that sample can't represent the corpus.  Memoized
+    per corpus fingerprint and K: train once per process, the stand-in
+    for the persisted model (on disk: ``_ann_index_path``)."""
+    n_k = _corpus_ivf_k(cat)  # K derived from corpus size
 
+    def train() -> np.ndarray | None:
+        sample = _train_sample(cat, max(_IVF_SAMPLE, 32 * n_k))
+        if not sample:  # empty corpus: nothing to quantize (callers emit empty)
+            return None
+        x = np.asarray(sample, dtype=np.float64)
+        k_fit = min(n_k, len(x))
+        rng = np.random.RandomState(7)
+        cents = x[rng.choice(len(x), k_fit, replace=False)]
+        for _ in range(_IVF_ITERS):
+            assign = _assign_chunked(x, cents)
+            for k in range(k_fit):
+                if (assign == k).any():
+                    cents[k] = x[assign == k].mean(0)
+        return cents
 
-#: Distributed-trained coarse quantizers, keyed by sf_dir (twin of
-#: _CENTROID_CACHE for the dataflow trainer).
-_CENTROID_CACHE_DIST: dict[str, np.ndarray] = {}
+    return memo("ivf_centroids", cat.sf_dir, ("embeddings",), train, extra=(n_k,))
 
 
 def _train_centroids_distributed(cat: Catalog, iters: int = _IVF_ITERS) -> np.ndarray | None:
@@ -325,42 +291,38 @@ def _train_centroids_distributed(cat: Catalog, iters: int = _IVF_ITERS) -> np.nd
     K centroids (a few KiB) return to the driver between iterations —
     the kmeans‖ execution shape: O(corpus) work per pass, O(K·dim)
     driver state, never a corpus collect.  Init is the first K vectors
-    in deterministic xxhash64 order (:func:`_train_sample_order` — a
+    in deterministic xxhash64 order (:func:`_train_sample` — a
     no-RNG pseudo-shuffle; first-K *by vec_id* was prefix-biased).
     Empty clusters keep their previous centroid, like the sampled
     trainer.
 
     tests/test_llm_ops.py asserts IVF recall with these centroids is
-    within tolerance of the sampled trainer's.
+    within tolerance of the sampled trainer's.  Memoized per
+    fingerprint, K and ``iters``.
     """
-    cached = _CENTROID_CACHE_DIST.get(cat.sf_dir)
-    if cached is not None:
-        return cached
-    emb = cat.embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    n_k = _corpus_ivf_k(cat)  # K derived from corpus size
+
+    def train() -> np.ndarray | None:
+        init = _train_sample(cat, n_k)
+        if not init:  # empty corpus: nothing to quantize (callers emit empty)
+            return None
+        cents = np.asarray(init, dtype=np.float64)
+        dim = cents.shape[1]
+        emb = cat.embeddings.select(F.col("embedding").cast("array<double>").alias("v"))
+        for _ in range(iters):
+            recentered = (
+                emb.select(_nearest_centroid(F.col("v"), cents).alias("cid"), "v")
+                .groupBy("cid")
+                .agg(*[F.avg(F.col("v")[i]).alias(f"c{i}") for i in range(dim)])
+                .collect()  # exactly K rows — bounded by design
+            )
+            for r in recentered:
+                cents[r["cid"]] = [r[f"c{i}"] for i in range(dim)]
+        return cents
+
+    return memo(
+        "ivf_centroids_dist", cat.sf_dir, ("embeddings",), train, extra=(n_k, iters)
     )
-    init = (
-        _train_sample_order(emb)
-        .limit(_corpus_ivf_k(cat))  # K derived from corpus size
-        .select("v")
-        .toPandas()["v"]  # bounded: limit() right above caps the rows
-        .tolist()
-    )
-    if not init:  # empty corpus: nothing to quantize (callers emit empty)
-        return None
-    cents = np.asarray(init, dtype=np.float64)
-    dim = cents.shape[1]
-    for _ in range(iters):
-        recentered = (
-            emb.select(_nearest_centroid(F.col("v"), cents).alias("cid"), "v")
-            .groupBy("cid")
-            .agg(*[F.avg(F.col("v")[i]).alias(f"c{i}") for i in range(dim)])
-            .collect()  # exactly K rows — bounded by design
-        )
-        for r in recentered:
-            cents[r["cid"]] = [r[f"c{i}"] for i in range(dim)]
-    _CENTROID_CACHE_DIST[cat.sf_dir] = cents
-    return cents
 
 
 def _centroid_dist2(vec_col, c: np.ndarray):
@@ -462,7 +424,7 @@ def _empty_topk(spark: SparkSession) -> DataFrame:
 @query("sim_ann_ivf", oracle=None, tags=("similarity", "ann", "ivf"))
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k via IVF coarse quantization: k-means centroids (trained
-    once per sf_dir on a bounded sample, cached), JVM-side cluster
+    once per corpus on a bounded sample, memoized), JVM-side cluster
     assignment, search only the probe's nprobe nearest clusters, exact
     cosine re-rank inside.
 
@@ -559,17 +521,19 @@ def _ann_index_path(sf_dir: str) -> str:
     never reuse each other's index — a basename collision would
     silently return corpus A's neighbors for corpus B's queries (the
     readable basename stays in the key for humans; the hash carries
-    identity).  In-place DATA edits under the same path still require
-    dropping the index, exactly as for any ingest-time index; the
-    version prefix invalidates on CODE changes only.
+    identity).  The hash also covers the embeddings table's fingerprint
+    (``catalog.table_files``), so an in-place rewrite lands in a fresh
+    index beside the fresh quantizer the memo trains for it; the
+    version prefix invalidates on CODE changes.
     """
     import hashlib
     import os
     import tempfile
 
     resolved = os.path.abspath(sf_dir.rstrip("/") or "/")
+    fp = repr(table_files(sf_dir, "embeddings"))
     tag = (os.path.basename(resolved) or "default") + "-" + hashlib.sha256(
-        resolved.encode("utf-8")
+        f"{resolved}\0{fp}".encode("utf-8")
     ).hexdigest()[:12]
     return os.path.join(
         tempfile.gettempdir(), "dirhash_spark_ann_index", f"v{_ANN_INDEX_VERSION}", tag
@@ -1031,51 +995,33 @@ def _pq_rerank(n_vectors: int) -> int:
     return min(_PQ_RERANK_MAX, max(_PQ_RERANK_MIN, -(-n_vectors // _PQ_TARGET)))
 
 
-#: Derived (codebook K, re-rank depth) per sf_dir; pinnable by benches
-#: exactly like _IVF_K_CACHE.
-_PQ_PARAM_CACHE: dict[str, tuple[int, int]] = {}
-
-
 def _corpus_pq_params(cat: Catalog) -> tuple[int, int]:
-    p = _PQ_PARAM_CACHE.get(cat.sf_dir)
-    if p is None:
-        n = _corpus_n(cat)
-        p = (_pq_k(n), _pq_rerank(n))
-        _PQ_PARAM_CACHE[cat.sf_dir] = p
-    return p
-
-
-#: Trained sub-codebooks keyed by sf_dir, shape (_PQ_M, k_pq, D/_PQ_M).
-_PQ_CACHE: dict[str, np.ndarray] = {}
+    """Derived (codebook K, re-rank depth) for the corpus."""
+    n = table_rowcount(cat.spark, cat.sf_dir, "embeddings")
+    return _pq_k(n), _pq_rerank(n)
 
 
 def _train_pq_codebooks(cat: Catalog) -> np.ndarray | None:
     """Per-subspace k-means codebooks (Jégou/Douze/Schmid, "Product
     quantization for nearest neighbor search", TPAMI 2011) on a bounded
     deterministic sample — O(sample) driver-side work at ANY corpus
-    size, cached per sf_dir.  The sample grows with the derived
+    size, memoized per fingerprint and codebook size; shape
+    (_PQ_M, k_pq, D/_PQ_M).  The sample grows with the derived
     codebook (16 points per centroid, floor _IVF_SAMPLE) so a 256-
     centroid book never trains on fewer points than centroids; at the
     fixture sizes the derived K is _PQ_K_MIN and the sample covers the
     whole corpus (membership identical to the fixed-constant era; the
     hash-ordered sampling changes only row ORDER, and the pinned
     recall floors hold on the retrained books)."""
-    cached = _PQ_CACHE.get(cat.sf_dir)
-    if cached is not None:
-        return cached
     k_pq, _ = _corpus_pq_params(cat)
-    sample = (
-        _train_sample_order(cat.embeddings)
-        .limit(max(_IVF_SAMPLE, 16 * k_pq))
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .toPandas()["v"]  # bounded: limit() right above caps the rows
-        .tolist()
-    )
-    if not sample:  # empty corpus: nothing to encode (callers emit empty)
-        return None
-    books = _fit_pq_books(np.asarray(sample, dtype=np.float64), k_pq)
-    _PQ_CACHE[cat.sf_dir] = books
-    return books
+
+    def train() -> np.ndarray | None:
+        sample = _train_sample(cat, max(_IVF_SAMPLE, 16 * k_pq))
+        if not sample:  # empty corpus: nothing to encode (callers emit empty)
+            return None
+        return _fit_pq_books(np.asarray(sample, dtype=np.float64), k_pq)
+
+    return memo("pq_books", cat.sf_dir, ("embeddings",), train, extra=(k_pq,))
 
 
 def _fit_pq_books(x: np.ndarray, k_pq: int) -> np.ndarray:
@@ -1099,12 +1045,6 @@ def _fit_pq_books(x: np.ndarray, k_pq: int) -> np.ndarray:
     return books
 
 
-#: Residual sub-codebooks for the v7 index (trained on v − nearest
-#: coarse centroid), keyed by sf_dir — sibling of _PQ_CACHE, which
-#: keeps the RAW-vector books ``sim_ann_pq`` (no coarse stage) uses.
-_PQR_CACHE: dict[str, np.ndarray] = {}
-
-
 def _train_pq_residual_codebooks(cat: Catalog, cents: np.ndarray) -> np.ndarray | None:
     """Residual PQ codebooks (Jégou et al., TPAMI 2011 §IV-A — the
     FAISS ``IVFx,PQy`` layout): quantize ``v − centroid(v)`` instead of
@@ -1116,24 +1056,19 @@ def _train_pq_residual_codebooks(cat: Catalog, cents: np.ndarray) -> np.ndarray 
     centroid, so the books spend all their resolution on the
     within-list displacement, exactly the scale the blob case needs.
     Same bounded deterministic sample and per-subspace k-means as the
-    raw trainer (:func:`_fit_pq_books`)."""
-    cached = _PQR_CACHE.get(cat.sf_dir)
-    if cached is not None:
-        return cached
+    raw trainer (:func:`_fit_pq_books`); memoized per fingerprint,
+    codebook size and K (``cents`` is the corpus's sampled quantizer)."""
     k_pq, _ = _corpus_pq_params(cat)
-    sample = (
-        _train_sample_order(cat.embeddings)
-        .limit(max(_IVF_SAMPLE, 16 * k_pq))
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .toPandas()["v"]  # bounded: limit() right above caps the rows
-        .tolist()
-    )
-    if not sample:
-        return None
-    x = np.asarray(sample, dtype=np.float64)
-    books = _fit_pq_books(x - cents[_assign_chunked(x, cents)], k_pq)
-    _PQR_CACHE[cat.sf_dir] = books
-    return books
+
+    def train() -> np.ndarray | None:
+        sample = _train_sample(cat, max(_IVF_SAMPLE, 16 * k_pq))
+        if not sample:
+            return None
+        x = np.asarray(sample, dtype=np.float64)
+        return _fit_pq_books(x - cents[_assign_chunked(x, cents)], k_pq)
+
+    key = (k_pq, len(cents))
+    return memo("pq_residual_books", cat.sf_dir, ("embeddings",), train, extra=key)
 
 
 def _pq_codes_nrm(v: np.ndarray, books: np.ndarray):

@@ -16,7 +16,7 @@ Contract details that live here so every operator honors them:
   parameter-deriving ops (``sim_ann_ivfpq``, the ``*_indexed`` ANN
   forms, ``dedup_simhash``, ``dedup_embedding_ann``) do bounded work
   at query-construction time — index build for the indexed forms, one
-  cached corpus row count per sf_dir for the derived-sizing rules
+  memoized corpus row count for the derived-sizing rules
   (answered from local parquet footers without a Spark job where
   possible; a distributed count on non-local layouts) — see SURVEY
   §2.C's eager-construction note.

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Catalog, sink_dir
+from ..catalog import Catalog, memo, sink_dir
 from ..operators.dedup import BLOOM_PROBE_ORACLE as _BLOOM_PROBE_ORACLE
 from ..registry import query
 
@@ -1021,11 +1021,6 @@ def stage_replay_from(
 #: A/B measured optimal on the staged corpus (see run_session_flush).
 _STATE_ROWS_PER_PARTITION = 256
 
-#: sf_dir -> derived width (the estimate scan is one column-pruned
-#: pass over events; same per-corpus memoization as the IVF trainers).
-_STATE_WIDTH_CACHE: dict[str, int] = {}
-
-
 def _width_for_sessions(open_sessions: int) -> int:
     """Power-of-two width for an open-session estimate: the smallest
     2^k holding :data:`_STATE_ROWS_PER_PARTITION` rows per partition,
@@ -1043,18 +1038,18 @@ def _session_state_width(spark: SparkSession, sf_dir: str) -> int:
     """Derive the session stream's state-store width from the corpus:
     open-session cardinality ≈ distinct users, estimated with
     ``approx_count_distinct`` (a sketch is plenty for a power-of-two
-    sizing decision), sized by :func:`_width_for_sessions`."""
-    cached = _STATE_WIDTH_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    users = (
-        Catalog(spark, sf_dir)
-        .events.agg(F.approx_count_distinct("user_id"))
-        .first()[0]
-    )
-    width = _width_for_sessions(users)
-    _STATE_WIDTH_CACHE[sf_dir] = width
-    return width
+    sizing decision), sized by :func:`_width_for_sessions` and memoized
+    per events fingerprint."""
+
+    def derive() -> int:
+        users = (
+            Catalog(spark, sf_dir)
+            .events.agg(F.approx_count_distinct("user_id"))
+            .first()[0]
+        )
+        return _width_for_sessions(users)
+
+    return memo("state_width", sf_dir, ("events",), derive)
 
 
 def run_session_flush(

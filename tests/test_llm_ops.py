@@ -329,9 +329,6 @@ def test_index_duplicate_grouping_bounded_and_exact(spark, tmp_path):
             assert got == exact, fn.__name__  # (b) bit-identical, ties included
     finally:
         shutil.rmtree(S._ann_index_path(sf), True)
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                      S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE, S._CENTROID_CACHE_DIST):
-            cache.pop(sf, None)
 
 
 def test_cluster_canonical_properties(spark, sf_dir):
@@ -887,10 +884,6 @@ def test_embedding_ann_duplicate_group_chain_bounded(spark, tmp_path):
         import shutil
 
         shutil.rmtree(S._ann_index_path(sf), True)
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                      S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE,
-                      S._CENTROID_CACHE_DIST):
-            cache.pop(sf, None)
 
 
 def test_ivfpq_dense_blob_saturation_fallback(spark, tmp_path):
@@ -933,10 +926,6 @@ def test_ivfpq_dense_blob_saturation_fallback(spark, tmp_path):
         assert recall >= 0.9, f"saturation fallback recall@10 {recall} < 0.9"
     finally:
         shutil.rmtree(S._ann_index_path(sf), True)
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                      S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE,
-                      S._CENTROID_CACHE_DIST):
-            cache.pop(sf, None)
 
 
 def test_embedding_ann_dedup_recall_and_exact_precision(spark):
@@ -1061,9 +1050,6 @@ def test_pq_derived_codebook_recall_floor(spark, tmp_path):
         assert recall >= 0.7, f"derived-codebook IVFPQ recall@10 {recall} < 0.7"
     finally:
         shutil.rmtree(S._ann_index_path(sf), True)
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                      S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE, S._CENTROID_CACHE_DIST):
-            cache.pop(sf, None)
 
 
 def _write_skew_embeddings(tmp_path):
@@ -1630,9 +1616,6 @@ def test_zero_norm_embedding_never_ranks(spark, tmp_path):
             ), fn.__name__
     finally:
         shutil.rmtree(S._ann_index_path(sf), True)
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                      S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE, S._CENTROID_CACHE_DIST):
-            cache.pop(sf, None)
 
 
 def test_minhash_modmul_exact_vs_bigint():
@@ -1796,7 +1779,7 @@ def test_simhash_hot_distinct_bucket_window_beats_chain(
     planted = spark.createDataFrame(fps, "doc_id long, fp long")
     monkeypatch.setattr(dedup_mod, "_BUCKET_FULL_EXPAND_CAP", 8)  # < 19
     monkeypatch.setattr(dedup_mod, "_simhash_fingerprints", lambda cat: planted)
-    monkeypatch.setitem(dedup_mod._N_DOCS_CACHE, str(tmp_path), 1)
+    monkeypatch.setattr(dedup_mod, "_corpus_n_docs", lambda cat: 1)
     rows = QUERIES["dedup_simhash"].fn(spark, str(tmp_path)).collect()
     got = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in rows}
     assert got == {(0, 1): 1}
@@ -1830,7 +1813,7 @@ def test_simhash_derived_cap_keeps_exact_pairs_past_old_cliff(
     )
     planted = spark.createDataFrame(fps, "doc_id long, fp long")
     monkeypatch.setattr(dedup_mod, "_simhash_fingerprints", lambda cat: planted)
-    monkeypatch.setitem(dedup_mod._N_DOCS_CACHE, str(tmp_path), 50_000_000)
+    monkeypatch.setattr(dedup_mod, "_corpus_n_docs", lambda cat: 50_000_000)
     rows = QUERIES["dedup_simhash"].fn(spark, str(tmp_path)).collect()
     got = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in rows}
     # every doc shares quarter 0, so band 0 is each pair's first shared
@@ -1924,7 +1907,7 @@ def test_adc_table_sanitizes_non_finite(spark, monkeypatch):
     real = S._train_pq_codebooks(Catalog(spark, sf))
     poisoned = real.copy()
     poisoned[0, :, :] = np.nan  # one whole subspace unusable
-    monkeypatch.setitem(S._PQ_CACHE, sf, poisoned)
+    monkeypatch.setattr(S, "_train_pq_codebooks", lambda cat: poisoned)
     rows = QUERIES["sim_ann_pq"].fn(spark, sf).collect()
     assert len(rows) == 10
     assert all(r["cosine"] is not None and math.isfinite(r["cosine"]) for r in rows)
@@ -1934,7 +1917,7 @@ def test_adc_table_sanitizes_non_finite(spark, monkeypatch):
     )
     poisonedr = realr.copy()
     poisonedr[0, :, :] = np.nan
-    monkeypatch.setitem(S._PQR_CACHE, sf, poisonedr)
+    monkeypatch.setattr(S, "_train_pq_residual_codebooks", lambda cat, c: poisonedr)
     rows = QUERIES["sim_ann_ivfpq"].fn(spark, sf).collect()
     assert len(rows) == 10
     assert all(r["cosine"] is not None and math.isfinite(r["cosine"]) for r in rows)
@@ -2012,8 +1995,9 @@ def test_pq_duplicate_clique_does_not_flood_rerank(spark, tmp_path, monkeypatch)
         str(tmp_path / "embeddings.parquet"),
     )
     sf = str(tmp_path)
-    monkeypatch.setitem(S._PQ_CACHE, sf, np.zeros((8, 32, 8)))
-    monkeypatch.setitem(S._PQ_PARAM_CACHE, sf, (32, 12))  # depth 12 < clique
+    monkeypatch.setattr(S, "_train_pq_codebooks", lambda cat: np.zeros((8, 32, 8)))
+    # re-rank depth 12 < the 60-strong clique
+    monkeypatch.setattr(S, "_corpus_pq_params", lambda cat: (32, 12))
     got = QUERIES["sim_ann_pq"].fn(spark, sf).collect()
     assert [r["vec_id"] for r in got] == list(range(61, 71))
 
@@ -2058,8 +2042,8 @@ def test_pq_winning_clique_expands_to_members(spark, tmp_path, monkeypatch):
         str(tmp_path / "embeddings.parquet"),
     )
     sf = str(tmp_path)
-    monkeypatch.setitem(S._PQ_CACHE, sf, np.zeros((8, 32, 8)))
-    monkeypatch.setitem(S._PQ_PARAM_CACHE, sf, (32, 12))
+    monkeypatch.setattr(S, "_train_pq_codebooks", lambda cat: np.zeros((8, 32, 8)))
+    monkeypatch.setattr(S, "_corpus_pq_params", lambda cat: (32, 12))
     got = QUERIES["sim_ann_pq"].fn(spark, sf).collect()
     # top-5 = the distinct closer vectors, then the clique's five
     # lowest member ids (ties broken by vec_id), each its own row
@@ -2185,7 +2169,7 @@ def test_simhash_window_chunking_is_output_invisible(spark, tmp_path, monkeypatc
     planted = spark.createDataFrame(fps, "doc_id long, fp long")
     monkeypatch.setattr(dedup_mod, "_BUCKET_FULL_EXPAND_CAP", 8)
     monkeypatch.setattr(dedup_mod, "_simhash_fingerprints", lambda cat: planted)
-    monkeypatch.setitem(dedup_mod._N_DOCS_CACHE, str(tmp_path), 1)
+    monkeypatch.setattr(dedup_mod, "_corpus_n_docs", lambda cat: 1)
 
     one_chunk = {
         (r["doc_a"], r["doc_b"]): r["hamming"]

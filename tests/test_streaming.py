@@ -250,6 +250,38 @@ def test_session_flush_restart_recovery(spark, sf_dir, tmp_path):
     assert got == expected and len(got) > 0
 
 
+def test_replay_staging_follows_rewritten_events(spark, sf_dir, tmp_path):
+    """Staging keeps wave files that already exist, so a sink reused
+    across a rewrite of ``events.parquet`` would replay the OLD events.
+    The sink token carries the corpus fingerprint: after the rewrite,
+    staging lands in a fresh directory and the replayed sessions follow
+    the new events."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from dirhash_spark.catalog import sink_dir
+    from dirhash_spark.streaming.stateful import stage_session_replay
+
+    sf, events = str(tmp_path), pq.read_table(f"{sf_dir}/events.parquet")
+    pq.write_table(events, f"{sf}/events.parquet")
+    first = sink_dir("t_restage", sf)
+    stage_session_replay(spark, sf, first)
+    kept = events.filter(pc.equal(pc.bit_wise_and(events["user_id"], 1), 0))
+    pq.write_table(kept, f"{sf}/events.parquet")
+    src = sink_dir("t_restage", sf)
+    try:
+        stage_session_replay(spark, sf, src)
+        got = replay_sessions(spark, src, "t_restage_sessions")
+        expected = session_counts_batch(load_table(spark, sf, "events")).collect()
+        assert got == sorted(map(tuple, expected)) and got
+        assert {r[0] for r in got} == set(kept["user_id"].to_pylist())
+    finally:
+        shutil.rmtree(first, True)
+        shutil.rmtree(src, True)
+
+
 def test_session_flush_restores_shuffle_conf_on_failure(spark, sf_dir, monkeypatch):
     """run_session_flush scopes spark.sql.shuffle.partitions to its
     state width; a failure while the scoped conf is live must restore
@@ -270,7 +302,7 @@ def test_session_flush_restores_shuffle_conf_on_failure(spark, sf_dir, monkeypat
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_session_state_width_derived_from_corpus(spark, sf_dir):
+def test_session_state_width_derived_from_corpus(spark, sf_dir, monkeypatch):
     """The session stream's state-store width is DERIVED from the
     corpus's open-session estimate (distinct users), not hand-picked:
     pin the sizing rule at its anchors — the staged sf0.1 corpus
@@ -298,10 +330,10 @@ def test_session_state_width_derived_from_corpus(spark, sf_dir):
     users = load_table(spark, sf_dir, "events").select(
         F.countDistinct("user_id")
     ).first()[0]
-    S._STATE_WIDTH_CACHE.pop(sf_dir, None)
     assert S._session_state_width(spark, sf_dir) == S._width_for_sessions(users)
-    # memoized: second call answers from the cache
-    assert sf_dir in S._STATE_WIDTH_CACHE
+    # memoized: a second call runs no estimate scan
+    monkeypatch.setattr(S, "Catalog", None)
+    assert S._session_state_width(spark, sf_dir) == S._width_for_sessions(users)
 
 
 def test_session_replay_randomized_equivalence(spark, tmp_path):
@@ -317,9 +349,6 @@ def test_session_replay_randomized_equivalence(spark, tmp_path):
     import random
     from datetime import datetime, timedelta
 
-    from pyspark.sql import functions as F
-
-    from dirhash_spark.streaming.ops import session_counts
     from dirhash_spark.streaming.stateful import stage_replay_from
 
     for seed in (1, 7, 42):
@@ -339,27 +368,7 @@ def test_session_replay_randomized_equivalence(spark, tmp_path):
 
         src = str(tmp_path / f"src_{seed}")
         stage_replay_from(spark, ev, src)
-        stream = (
-            spark.readStream.schema("ts TIMESTAMP, user_id BIGINT")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        name = f"t_rand_sessions_{seed}"
-        q = (
-            session_counts(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            assert q.awaitTermination(180)
-        finally:
-            q.stop()
-        got = sorted(
-            map(tuple, spark.table(name).where(F.col("user_id") >= 0).collect())
-        )
+        got = replay_sessions(spark, src, f"t_rand_sessions_{seed}")
         expected = sorted(map(tuple, session_counts_batch(ev).collect()))
         assert got == expected and len(got) > 0, f"seed {seed}"
 
@@ -379,6 +388,19 @@ def session_counts_batch(ev):
             "n_events",
         )
     )
+
+
+def replay_sessions(spark, src, name):
+    """Replay the waves staged under ``src`` through the streaming
+    session_counts into memory table ``name``; the real (non-sentinel)
+    sessions, sorted."""
+    stream = (
+        spark.readStream.schema("ts TIMESTAMP, user_id BIGINT")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    out = _run_to_memory(spark, session_counts(stream), name, "append")
+    return sorted(map(tuple, out.where("user_id >= 0").collect()))
 
 
 def test_cdc_merge_restart_and_replay_idempotence(spark, sf_dir, tmp_path):
