@@ -2,18 +2,26 @@
 
 Stages (mirroring dirhash.py:307-444, re-expressed Spark-first):
   1. LIST   driver-side recursive listing (metadata only)
-  2. PLAN   chunk metadata DataFrame (no bytes touched)
-  3. READ+HASH   ONE fused mapInPandas stage: positioned range read,
-            digest the v1 preimage immediately, emit only
-            (path, block_num, digest) — chunk bytes never leave the
-            Python worker that read them.  The earlier two-stage form
+  2. PLAN   chunk metadata rows (no bytes touched), built on the
+            driver from the listing in the fold's (path, block_num)
+            order and cut into at most defaultParallelism contiguous
+            runs of roughly equal bytes, one run per partition
+            (chunks.chunk_runs).  The listing is already on the driver,
+            so this range split needs no sampling job and no shuffle.
+  3. READ+HASH   ONE fused mapInPandas stage straight over the plan's
+            partitions: positioned range read, digest the v1 preimage
+            immediately, emit only (path, block_num, digest) — chunk
+            bytes never leave the Python worker that read them.  Each
+            task reads one contiguous range of files in offset order.
+            The earlier two-stage form
             (read in pandas, ship content to the JVM, F.sha2 there)
             measured 0.04 GB/s at 1 GB: Arrow-serializing every content
             byte Python→JVM cost more than the hashing itself.  Fusing
             made it ~20x faster.  This keeps the reference's one good
             physical choice — hash before any shuffle (dirhash.py:412-
             413) — and strengthens it: nothing but 32-byte digests ever
-            crosses a process boundary.
+            crosses a process boundary, and the whole of stages 2-4 is
+            one Spark job of one stage.
   4. COLLECT   unsorted collect of digest rows (tiny).  No cluster sort:
             DataFrame orderBy = range exchange whose boundary sampling
             re-executes the whole read+hash child a second time.  The
@@ -38,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 from ..session import configure
-from .chunks import chunk_plan, chunk_plan_df, open_for_range_read
+from .chunks import chunk_plan, chunk_plan_df, read_plan_ranges
 from .codec import (
     DEFAULT_BLOCK_SIZE,
     build_hash_string,
@@ -103,49 +111,38 @@ def _read_hash_ranges(algo: str):
     """Fused range-read + v1-preimage digest over chunk-plan rows.
 
     Incremental ``update`` calls avoid materializing the concatenated
-    preimage (a full extra copy of every chunk).  File handles are
-    cached across the rows of a batch (opened once per file per batch,
-    never per row), and the producer sorts each partition on
-    (path, block_num) — ``repartition(...).sortWithinPartitions(...)``
-    in :func:`digest_directory` — so a partition's reads advance
-    file- and offset-ORDERED instead of seeking randomly (sequential
-    range reads are the fast path on s3a/hdfs, the case
-    :func:`open_for_range_read` exists for).  A repartitionByRange
-    form (contiguous global runs, fewer opens per file) was A/B'd and
-    rejected: its boundary-sampling pass is a whole extra job that
-    measured 10-20% of the local fold wall, while the open count is
-    already bounded by min(chunks, partitions) per file either way.
+    preimage (a full extra copy of every chunk).  On the driver-planned
+    route (:func:`digest_directory`) a partition is one contiguous run
+    of the (path, block_num)-ordered plan, so its reads advance file-
+    and offset-ORDERED instead of seeking randomly (sequential range
+    reads are the fast path on s3a/hdfs, the case
+    ``chunks.open_for_range_read`` exists for), and each file is opened
+    at most once per batch; on the cluster-listing route
+    (:func:`digest_directory_df`) ``sortWithinPartitions`` after the
+    hash exchange gives each partition the same order.  The run split
+    supersedes the earlier
+    ``repartition(...).sortWithinPartitions(...)`` form and its
+    rejected ``repartitionByRange`` alternative: a range split planned
+    on the driver, where the listing already is, needs neither a
+    shuffle nor a boundary-sampling job.
     """
 
     def inner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         func = get_hash_func(algo)
         for pdf in batches:
-            handles: dict[str, object] = {}
-            try:
-                digests = []
-                for path, num, full_path, offset, length in zip(
-                    pdf["path"], pdf["block_num"], pdf["full_path"], pdf["offset"], pdf["length"]
-                ):
-                    fh = handles.get(full_path)
-                    if fh is None:
-                        fh = handles[full_path] = open_for_range_read(full_path)
-                    fh.seek(int(offset))
-                    h = func()
-                    h.update(path.encode("utf-8"))
-                    h.update(b"\x00")
-                    h.update(str(int(num)).encode("ascii"))
-                    h.update(b"\x00")
-                    h.update(fh.read(int(length)))
-                    digests.append(h.digest())
-                yield pd.DataFrame(
-                    {"path": pdf["path"], "block_num": pdf["block_num"], "digest": digests}
-                )
-            finally:
-                for fh in handles.values():
-                    try:
-                        fh.close()
-                    except Exception:
-                        pass
+            digests = []
+            # the reader first, so zip exhausts it and its handles close
+            for content, path, num in zip(read_plan_ranges(pdf), pdf["path"], pdf["block_num"]):
+                h = func()
+                h.update(path.encode("utf-8"))
+                h.update(b"\x00")
+                h.update(str(int(num)).encode("ascii"))
+                h.update(b"\x00")
+                h.update(content)
+                digests.append(h.digest())
+            yield pd.DataFrame(
+                {"path": pdf["path"], "block_num": pdf["block_num"], "digest": digests}
+            )
 
     return inner
 
@@ -153,13 +150,11 @@ def _read_hash_ranges(algo: str):
 def digest_directory(
     spark: SparkSession, entries, blocksize: int, algo: str
 ) -> DataFrame:
-    """(path, block_num, digest) for every chunk — fused single stage."""
+    """(path, block_num, digest) for every chunk — one job of one stage:
+    the fused read+hash runs directly over the driver-planned runs of
+    :func:`chunks.chunk_plan`, with no exchange and no sort."""
     get_hash_func(algo)  # whitelist check before any cluster work
-    plan = chunk_plan(spark, entries, blocksize)
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    return plan.repartition(n_parts, "path", "block_num").sortWithinPartitions(
-        "path", "block_num"
-    ).mapInPandas(
+    return chunk_plan(spark, entries, blocksize).mapInPandas(
         _read_hash_ranges(algo), DIGEST_SCHEMA
     )
 

@@ -1125,10 +1125,10 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup pair graph, one canonical keeper per cluster — the step a
     real curation pipeline needs after candidate pairs (pairs alone
     can't answer "which rows do I drop": a↔b and b↔c must collapse into
-    one {{a,b,c}} cluster with a single survivor).
+    one {a,b,c} cluster with a single survivor).
 
     Edges = exact trigram-Jaccard pairs (the dedup_ngram_jaccard
-    construction) at ≥ {tau}; components via distributed
+    construction) at ≥ ``_CLUSTER_JACCARD``; components via distributed
     min-label propagation + pointer jumping (see
     :func:`_connected_components`); canonical = smallest doc_id in the
     component.  Every document appears in the output — singletons are
@@ -1138,7 +1138,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle computes the same fixpoint declaratively: a recursive
     CTE builds the reachability closure and takes min(reachable id) per
     doc — portable SQL, no engine-specific CC primitive.
-    """.format(tau=_CLUSTER_JACCARD)
+    """
     cat = Catalog(spark, sf_dir)
     # NOT checkpointed before symmetrizing, unlike the semdedup/neardup
     # twins: the jaccard pairs sit directly above a join exchange, so
@@ -1264,12 +1264,12 @@ def dedup_cluster_canonical_bigstar(spark: SparkSession, sf_dir: str) -> DataFra
     """dedup_cluster_canonical's exact twin computed with the
     large-star/small-star algorithm (:func:`_cc_large_small_star`)
     instead of min-label propagation — same edges (trigram Jaccard >=
-    {tau}), same oracle, same (doc_id, cluster_id, is_canonical)
+    ``_CLUSTER_JACCARD``), same oracle, same (doc_id, cluster_id, is_canonical)
     fixpoint.  The alternating star rounds converge in O(log n) on
     skewed degree distributions and long chains where label propagation
     pays per-round full-label-table work; the round-count comparison on
     the adversarial fixtures lives in tests/test_llm_ops.py.
-    """.format(tau=_CLUSTER_JACCARD)
+    """
     cat = Catalog(spark, sf_dir)
     pairs = (
         REGISTRY["dedup_ngram_jaccard"]
@@ -2551,8 +2551,8 @@ _BLOOM_POS_SQL = ", ".join(
 def dedup_bloom_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build a Bloom-filter membership manifest over the corpus's
     content hashes (docs below the id split, as in dedup_incremental):
-    K={k} probe positions per document from disjoint sha256 hex
-    slices, OR-ed into {m}-bit words.  The returned
+    K=``_BLOOM_K`` probe positions per document from disjoint sha256 hex
+    slices, OR-ed into ``_BLOOM_M``-bit words.  The returned
     (word_idx, bits) table IS the manifest — at 100 TB it replaces the
     32-byte-per-doc hash manifest with ~1.25 bits/doc/probe: a 1e12-doc
     corpus needs a ~2 TB hash manifest but only a few GB of bloom
@@ -2563,7 +2563,7 @@ def dedup_bloom_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     commutative integer math — no engine variance anywhere, so even
     the false-positive pattern is reproducible.  One shuffle on the
     word index (256 groups), map-side combined.
-    """.format(k=_BLOOM_K, m=_BLOOM_M)
+    """
     cat = Catalog(spark, sf_dir)
     pos = (
         cat.documents.where(F.col("doc_id") < _INCR_SPLIT)
@@ -2627,7 +2627,7 @@ def dedup_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bloom math AND the operational measurement of its
     false-positive rate on this corpus (maybe_seen & !is_dup rows).
 
-    Scale shape: the manifest aggregates to {m}/32 rows and
+    Scale shape: the manifest aggregates to ``_BLOOM_M``/32 rows and
     broadcasts; the batch explodes K probe rows per doc, joins the
     broadcast manifest, and folds back to one row per doc with
     bool_and — map-side work plus one doc_id-keyed shuffle.  The
@@ -2635,7 +2635,7 @@ def dedup_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_incremental does (32-byte key semi-probe); production runs
     bloom-first and only hash-verifies the maybe_seen survivors,
     cutting manifest I/O by the true-negative rate.
-    """.format(m=_BLOOM_M)
+    """
     cat = Catalog(spark, sf_dir)
     corpus = cat.documents.where(F.col("doc_id") < _INCR_SPLIT).select(
         F.sha2("text", 256).alias("h")
@@ -2712,14 +2712,14 @@ _VERBATIM_PREPASS_MIN_BYTES = int(
 )
 
 
-def _verbatim_window_hashes(ws_col, wh_col):
-    """8-byte rolling window hash per {w}-word window: fold the
-    xxhash64 of each word through rotate-left-7 XOR — pure bitwise
-    (ANSI-safe, no overflow) and deterministic, so equal word windows
-    always hash equal; UNequal windows may collide, which is harmless
-    because every consumer re-groups survivors by the definitional
-    window STRING (collisions only admit a few extra postings to that
-    exact pass).""".format(w=_VERBATIM_W)
+def _verbatim_per_window_fold(ws_col, wh_col):
+    """One 8-byte hash per ``_VERBATIM_W``-word window, each window
+    folded on its own (not a rolling hash): the xxhash64 of each word
+    goes through rotate-left-7 XOR — pure bitwise (ANSI-safe, no
+    overflow) and deterministic, so equal word windows always hash
+    equal; UNequal windows may collide, which is harmless because every
+    consumer re-groups survivors by the definitional window STRING
+    (collisions only admit a few extra postings to that exact pass)."""
 
     def _rot7(a):
         return F.shiftleft(a, 7).bitwiseOR(F.shiftrightunsigned(a, 57))
@@ -2787,7 +2787,7 @@ def _verbatim_window_hashes(ws_col, wh_col):
 )
 def dedup_verbatim_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verbatim-copy forensics: for every document pair sharing at
-    least one {w}-word window, the length of the LONGEST contiguous
+    least one ``_VERBATIM_W``-word window, the length of the LONGEST contiguous
     shared word run and the total number of matching window pairs —
     the quote/boilerplate detector that set-overlap dedup
     (jaccard/containment) cannot express, because it is order- and
@@ -2796,15 +2796,15 @@ def dedup_verbatim_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     quote yields max_run_words = 60.
 
     Algorithm (all exact integers): a COUNT pre-pass over 8-byte
-    rolling window hashes decides WHICH windows are shared, then the
+    per-window hashes decides WHICH windows are shared, then the
     definitional string algorithm runs over only those survivors —
-    explode every {w}-word window with its position; bucket by window
+    explode every ``_VERBATIM_W``-word window with its position; bucket by window
     string (df-capped, the dedup_containment guard) and expand
     cross-doc position pairs in-row; matches at positions (pa, pb)
     with equal diagonal pa-pb that are CONSECUTIVE in pa belong to one
     verbatim run, stitched by the gaps-and-islands trick
     (pa - row_number over the diagonal); island of n windows = run of
-    n + {w} - 1 words.
+    n + ``_VERBATIM_W`` - 1 words.
 
     The hash pre-pass (r15, guide §8 "decide with small rows, move big
     rows once"), routed by corpus size
@@ -2832,7 +2832,7 @@ def dedup_verbatim_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded in-row expansion), one shuffle on the (pair, diagonal)
     window, one pair rollup — linear in postings + matched windows,
     never all-pairs.
-    """.format(w=_VERBATIM_W)
+    """
     from ..catalog import parquet_table_bytes
 
     cat = Catalog(spark, sf_dir)
@@ -2879,7 +2879,7 @@ def dedup_verbatim_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
         match_obs = Observation()
         matched = (
             p1.select(
-                F.explode(_verbatim_window_hashes("wh", F.col("wh"))).alias("h")
+                F.explode(_verbatim_per_window_fold("wh", F.col("wh"))).alias("h")
             )
             .groupBy("h")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -2897,7 +2897,7 @@ def dedup_verbatim_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "ws", F.transform("ws", lambda w: F.xxhash64(w)).alias("wh")
         )
         win_t = "ARRAY<STRUCT<pos: INT, win: STRING, h: BIGINT>>"
-        hashes = _verbatim_window_hashes("ws", F.col("wh"))
+        hashes = _verbatim_per_window_fold("ws", F.col("wh"))
         wins = F.when(
             F.size("ws") >= _VERBATIM_W,
             F.zip_with(

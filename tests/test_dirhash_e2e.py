@@ -118,6 +118,126 @@ def test_multiblock_chunking(spark, tree):
     assert all(len(r["content"]) == bs for r in rows)
 
 
+def test_chunk_runs_balanced_and_contiguous():
+    """The driver-side run split on a skewed listing (one 40-block file,
+    200 one-byte files, an empty file) at n=4: every chunk exactly once,
+    runs contiguous and ascending in Python (path, block_num) order, no
+    run above total/n + blocksize bytes, no rows for the empty file."""
+    from dirhash_spark.dirhash.chunks import chunk_runs
+    from dirhash_spark.dirhash.listing import Entry
+
+    bs, n = 1024, 4
+
+    def entry(rel, size):
+        return Entry(relative_path=rel, is_dir=False, size=size, full_path="/x/" + rel)
+
+    entries = [entry(f"f{i:03d}.txt", 1) for i in range(200)]
+    entries += [entry("f100 big.bin", 40 * bs), entry("empty.txt", 0)]
+    entries.append(Entry(relative_path="d/", is_dir=True, size=0, full_path="/x/d"))
+    runs = chunk_runs(entries, bs, n)
+
+    expected = sorted(
+        (e.relative_path, b) for e in entries if not e.is_dir for b in range(-(-e.size // bs))
+    )
+    assert [(r[0], r[1]) for run in runs for r in run] == expected
+    assert 1 <= len(runs) <= n and all(runs)
+    total = 40 * bs + 200
+    assert sum(r[4] for run in runs for r in run) == total
+    assert max(sum(r[4] for r in run) for run in runs) <= total / n + bs
+    assert all(r[3] == r[1] * bs for run in runs for r in run)
+    assert chunk_runs([entry("empty.txt", 0), entries[-1]], bs, n) == []
+    assert chunk_runs([], bs, n) == []
+
+
+def test_chunk_plan_partitions_are_the_runs(spark, tree):
+    """chunk_plan hands one run to each partition, in order; a tree with
+    no bytes is an empty plan."""
+    from dirhash_spark.dirhash.chunks import chunk_plan, chunk_runs
+
+    root, _ = tree
+    entries = list_entries(root)
+    bs = 32 * 1024
+    runs = chunk_runs(entries, bs, spark.sparkContext.defaultParallelism)
+    parts = chunk_plan(spark, entries, bs).rdd.glom().collect()
+    assert [[tuple(r) for r in part] for part in parts] == runs
+    empty = [e for e in entries if e.is_dir or e.size == 0]
+    assert chunk_plan(spark, empty, bs).count() == 0
+
+
+def test_digest_directory_is_one_job_one_stage(spark, tree):
+    """The fused read+hash runs straight over the driver-planned runs:
+    no Exchange and no Sort in the executed plan, and its collect is a
+    single job of a single stage."""
+    import re
+
+    from dirhash_spark.dirhash.hashdir import digest_directory
+
+    root, files = tree
+    entries = list_entries(root)
+    df = digest_directory(spark, entries, 32 * 1024, "sha256")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and not re.search(r"\bSort\b", plan), plan
+
+    sc = spark.sparkContext
+    group = "digest_directory_plan_shape"
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    assert (len(jobs), len(stages)) == (1, 1)
+    assert len(rows) == sum(-(-len(c) // (32 * 1024)) for c in files.values())
+
+
+def test_single_file_split_across_every_run(spark, tmp_path):
+    """One file split across every run (more than 3 chunks per core),
+    beside a non-ASCII name and a name with a space: the collect fold,
+    the streamed fold and the incremental route all return the
+    independent spec digest."""
+    import time
+
+    from dirhash_spark.dirhash.chunks import chunk_runs
+    from dirhash_spark.dirhash.incremental import (
+        build_chunk_manifest,
+        hash_directory_incremental,
+    )
+
+    n = spark.sparkContext.defaultParallelism
+    bs = 1024
+    root = tmp_path / "split"
+    files = {
+        "big.bin": bytes(range(256)) * (4 * (3 * n + 1)) + b"tail",
+        "naïve 文件.txt": "non-ascii".encode(),
+        "with space.txt": b"space",
+    }
+    for rel, content in files.items():
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_bytes(content)
+    runs = chunk_runs(list_entries(str(root)), bs, n)
+    assert len(runs) == n and all(any(r[0] == "big.bin" for r in run) for run in runs)
+
+    expected = spec_hash(str(root), files, bs)
+    assert hash_directory_raw(spark, str(root), "sha256", bs) == expected
+    assert hash_directory_raw_streamed(spark, str(root), "sha256", bs) == expected
+    assert hash_directory(spark, str(root), "sha256", "1k", streamed=True) == (
+        "v1-sha256-1k-" + expected
+    )
+
+    man = build_chunk_manifest(spark, str(root), "sha256", "1k").localCheckpoint()
+    time.sleep(0.01)  # ensure a distinct mtime on coarse filesystems
+    data = bytearray(files["big.bin"])
+    data[5 * bs + 3] ^= 0xFF
+    files["big.bin"] = bytes(data)
+    (root / "big.bin").write_bytes(files["big.bin"])
+    h, st = hash_directory_incremental(spark, str(root), man, "sha256", "1k")
+    assert h == "v1-sha256-1k-" + spec_hash(str(root), files, bs)
+    assert st["n_rehashed_files"] == 1
+
+
 def test_e2e_matches_spec(spark, tree):
     root, files = tree
     bs = 32 * 1024

@@ -2183,6 +2183,38 @@ def test_simhash_window_chunking_is_output_invisible(spark, tmp_path, monkeypatc
     assert one_chunk == many_chunks == {(0, 1): 1}
 
 
+def test_verbatim_per_window_fold_has_docstring():
+    from dirhash_spark.operators.dedup import _verbatim_per_window_fold
+
+    assert _verbatim_per_window_fold.__doc__ is not None
+
+
+def test_no_formatted_docstrings():
+    """A ``\"\"\"...\"\"\".format(...)`` first statement is a discarded
+    expression, not a docstring: ``__doc__`` stays None (and the
+    registry's ``Query.doc`` empty).  No function in the package may
+    open with one."""
+    import ast
+    import pathlib
+
+    import dirhash_spark
+
+    offenders = []
+    for path in pathlib.Path(dirhash_spark.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and node.body:
+                first = node.body[0]
+                if (
+                    isinstance(first, ast.Expr)
+                    and isinstance(first.value, ast.Call)
+                    and isinstance(first.value.func, ast.Attribute)
+                    and isinstance(first.value.func.value, ast.Constant)
+                    and isinstance(first.value.func.value.value, str)
+                ):
+                    offenders.append(f"{path.name}:{node.lineno} {node.name}")
+    assert not offenders, offenders
+
+
 def test_verbatim_runs_route_parity(spark, monkeypatch):
     """The corpus-size route of dedup_verbatim_runs is bit-identical:
     single-pass string form (small local corpora), hash pre-pass with

@@ -99,15 +99,23 @@ def test_chunk_plan_arithmetic(spark, sizes, blocksize):
     """For arbitrary file sizes: block offsets/lengths tile each file
     exactly — contiguous indices from 0, every block full except a
     short last one, lengths summing to the file size, empty files
-    absent (dirhash_test.py:205-208 semantics)."""
-    from dirhash_spark.dirhash.chunks import chunk_plan
-    from dirhash_spark.dirhash.listing import Entry
+    absent (dirhash_test.py:205-208 semantics) — on the driver-planned
+    route and, row for row, on the cluster-side ``chunk_plan_df``."""
+    from dirhash_spark.dirhash.chunks import chunk_plan, chunk_plan_df
+    from dirhash_spark.dirhash.listing import ENTRY_DF_SCHEMA, Entry
 
     entries = [
         Entry(relative_path=f"f{i}.bin", full_path=f"/nonexistent/f{i}.bin", size=s, is_dir=False)
         for i, s in enumerate(sizes)
     ]
     rows = chunk_plan(spark, entries, blocksize).collect()
+    # the cluster-side SQL arithmetic yields exactly the driver-side rows
+    entries_df = spark.createDataFrame(
+        [(e.relative_path, e.is_dir, e.size, e.full_path) for e in entries], ENTRY_DF_SCHEMA
+    )
+    assert sorted(map(tuple, chunk_plan_df(entries_df, blocksize).collect())) == sorted(
+        map(tuple, rows)
+    )
     by_file: dict[str, list] = {}
     for r in rows:
         by_file.setdefault(r["path"], []).append(r)
