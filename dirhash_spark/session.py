@@ -120,6 +120,9 @@ def get_spark(app_name: str = "dirhash_spark", master: str | None = None) -> Spa
     # dirhash_spark.worker_preload makes every forked worker inherit the
     # numpy/pandas/pyarrow imports copy-on-write instead of paying them
     # per worker (the measured "spawn storm" — see worker_preload.py).
+    # The daemon also fingerprints the zip importers on the worker's path
+    # before forking, so the importlib.invalidate_caches() PySpark runs
+    # per task re-reads no unchanged zip (~0.24 s CPU per task on 3.11).
     # The daemon runs `python -m dirhash_spark.worker_preload`, so the
     # package parent dir must be on the WORKER's PYTHONPATH; the factory
     # merges the JVM's inherited PYTHONPATH env, which we extend here

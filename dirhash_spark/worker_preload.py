@@ -16,10 +16,28 @@ task" applied one level earlier, once per EXECUTOR.  At cluster scale
 the same preload amortizes worker churn across thousands of task
 slots; nothing here is local-mode-specific.
 
+The daemon's second job is to stop every task from re-reading the zip
+archives on the worker's path.  PySpark's ``setup_spark_files`` calls
+``importlib.invalidate_caches()`` at the start of every Python task,
+and on CPython 3.11 that makes each ``zipimporter`` eagerly re-parse
+its archive's whole central directory (3.12 made it lazy,
+gh-103200).  A worker has about 16 such importers (``pyspark.zip``
+and its sub-packages, the py4j zip, the spark-core jar): ~0.24 s of
+CPU per task, half the task on a 0.5 s read+hash run.  When run as the
+daemon, this module wraps ``zipimporter.invalidate_caches`` so an
+importer re-reads its archive only when the archive's
+``(st_size, st_mtime_ns)`` differs from the fingerprint it last read
+(the fingerprint ``catalog.table_files`` uses), then invalidates once
+in the parent so every forked worker inherits the fingerprints.  A
+changed zip is still re-read; a missing one takes the stock path.
+Sessions built with the stock daemon (a host harness that sets no
+``spark.python.daemon.module``) keep paying the cost.
+
 Wired up by ``session.get_spark`` via ``spark.python.daemon.module``
 (a plain Spark conf, read at SparkContext start).  The import failures
 are tolerated so a slim environment (no pandas) degrades to exactly
-the stock daemon behavior.
+the stock daemon behavior.  Importing the module has no side effect
+beyond those imports; the wrap is installed only under ``__main__``.
 """
 
 from __future__ import annotations
@@ -32,7 +50,34 @@ for _mod in ("numpy", "pandas", "pyarrow", "pyarrow.parquet"):
     except Exception:
         pass
 
-if __name__ == "__main__":
-    from pyspark.daemon import manager
 
-    manager()
+def fingerprint_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only
+    when its ``(st_size, st_mtime_ns)`` changed since that importer's
+    last read.  Blind spot, as for table fingerprints: a same-size
+    rewrite within one filesystem timestamp tick."""
+    import os
+    import zipimport
+
+    stock = zipimport.zipimporter.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            self._read_fingerprint = None
+            return stock(self)
+        fingerprint = (st.st_size, st.st_mtime_ns)
+        if getattr(self, "_read_fingerprint", None) != fingerprint:
+            stock(self)
+            self._read_fingerprint = fingerprint
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+if __name__ == "__main__":
+    fingerprint_zip_invalidation()
+    import pyspark.daemon
+
+    importlib.invalidate_caches()  # fingerprint every importer before forking
+    pyspark.daemon.manager()
